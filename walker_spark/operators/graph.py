@@ -27,8 +27,6 @@ Scale shape per iteration (the standard distributed PageRank plan):
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -112,22 +110,7 @@ def pagerank(
     return out
 
 
-# The per-iteration localCheckpoint converts the rank frame to an RDD
-# scan, which blocks whole-stage fusion across iterations and costs one
-# materialization per iteration — measured ~2× the whole loop's wall on
-# sandbox-sized graphs. But a fully fused loop re-executes the rank
-# subtree once per reference, and ranks is referenced twice per
-# iteration (contrib + dangling mass), so the un-cut plan re-computes
-# ~2^iterations tiny subtrees: fine for few iterations over a small
-# graph, catastrophic for either a deep loop or a web-scale graph.
-# Fuse only when BOTH are small; everything else keeps the original
-# checkpoint-per-iteration loop (constant plan size at any scale).
-_FUSE_MAX_ITERS = 6
-_FUSE_MAX_NODES = int(os.environ.get("WALKER_SPARK_PAGERANK_FUSE_MAX", "2000000"))
-
-
 def _pagerank_loop(ranks, vd, e_deg, n, iterations, damping):
-    fused = int(iterations) <= _FUSE_MAX_ITERS and n <= _FUSE_MAX_NODES
     for _i in range(int(iterations)):
         contrib = (
             ranks.join(e_deg, ranks["__id"] == e_deg["__s"])
@@ -171,9 +154,8 @@ def _pagerank_loop(ranks, vd, e_deg, n, iterations, damping):
                 ).alias("__r"),
                 "__dang",
             )
+            .localCheckpoint(eager=False)
         )
-        if not fused:
-            ranks = ranks.localCheckpoint(eager=False)
     return ranks
 
 

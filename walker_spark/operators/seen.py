@@ -22,7 +22,6 @@ traffic is executor→executor tree-shaped, not all-to-driver.
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -169,8 +168,10 @@ def split_by_bloom(cands: DataFrame, bloom: BloomShards, key: str = "url") -> Da
 # footers, so the decision costs zero jobs and is scale-adaptive: early
 # rounds (and sandbox-sized crawls) skip the candidate-side shuffle
 # entirely, while a production-sized seen table keeps the shuffle
-# anti-join (billions of rows can never broadcast).
-SEEN_BROADCAST_MAX = int(os.environ.get("WALKER_SPARK_SEEN_BROADCAST_MAX", "1000000"))
+# anti-join (billions of rows can never broadcast). Recorded A/B below
+# the cap: bench.py's mega-round kernel (run_kernel), 15.4 s shuffle vs
+# 12.3 s broadcast (OPTIMIZATION_r06.md §1). Crossover above it unmeasured.
+SEEN_BROADCAST_MAX = 1_000_000
 
 
 def seen_anti_join(

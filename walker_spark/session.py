@@ -3,13 +3,15 @@
 from __future__ import annotations
 
 import os
+import sys
+import traceback
 
 # Module-level on purpose: _warm_engine's pandas-UDF type hints are
 # strings under ``from __future__ import annotations`` and get resolved
 # against THIS module's globals — with pandas imported function-locally
 # the decorator raised UNSUPPORTED_SIGNATURE into the warm-up's
 # best-effort except, silently reducing the whole engine warm-up to its
-# first two statements (found via WALKER_SPARK_WARM_DEBUG=1).
+# first two statements.
 import pandas as pd  # noqa: F401  (resolves warm-up UDF annotations)
 from pyspark.sql import SparkSession
 
@@ -20,7 +22,7 @@ __all__ = ["get_spark"]
 _WARMED: set[str] = set()
 
 
-def _warm_engine(spark: SparkSession) -> None:
+def _warm_engine(spark: SparkSession) -> bool:
     """Finish engine initialization eagerly, once per session.
 
     A fresh session lazily initializes half the engine on its first real
@@ -38,17 +40,18 @@ def _warm_engine(spark: SparkSession) -> None:
     build, but it must also never be invisible — a silently-skipped
     warm-up just moves session costs back into the first real query
     (exactly what happened when the pandas-UDF type hints stopped
-    resolving, see the module-level pandas import). The raising body
-    lives in :func:`_warm_pipeline` so tests can drive it directly;
-    set WALKER_SPARK_WARM_DEBUG=1 to see a swallowed failure.
+    resolving, see the module-level pandas import). So a failure prints
+    its traceback to stderr and returns False; :func:`get_spark` then
+    retries on its next call. The raising body lives in
+    :func:`_warm_pipeline` so tests can drive it directly.
     """
     try:
         _warm_pipeline(spark)
     except Exception:
-        if os.environ.get("WALKER_SPARK_WARM_DEBUG", "") == "1":
-            import traceback
-
-            traceback.print_exc()
+        print("walker_spark: engine warm-up failed", file=sys.stderr)
+        traceback.print_exc()
+        return False
+    return True
 
 
 def _warm_pipeline(spark: SparkSession) -> None:
@@ -241,7 +244,6 @@ def get_spark(
     spark = b.getOrCreate()
     if os.environ.get("WALKER_SPARK_NO_WARM", "") != "1":
         app_id = spark.sparkContext.applicationId
-        if app_id not in _WARMED:
+        if app_id not in _WARMED and _warm_engine(spark):
             _WARMED.add(app_id)
-            _warm_engine(spark)
     return spark
